@@ -117,9 +117,7 @@ def match_stream(
     watermark: str = "10 seconds",
     session_gap: str = "30 seconds",
     min_votes: int = matching.MIN_VOTES,
-    min_score: float = matching.MIN_SCORE,
     available_now: bool = True,
-    decode_partitions: int | None = None,
 ) -> StreamingQuery:
     """The graft streaming job: clip stream -> landmarks -> stream-static
     hash join against the index -> per-session offset voting -> match rows.
@@ -130,14 +128,11 @@ def match_stream(
     rising-edge state (process_odr.py:1131-1145): one final match row
     per clip session, emitted on window close (append mode).
 
-    ``decode_partitions``: pass a partition count to repartition the
-    clip stream before decoding when the source layout under-splits
-    (micro-batches of few/large files). Default None: rely on the
-    source layout (Iceberg bucket(clip_id) / enough files) — shuffling
-    raw clip bytes costs more than it buys on shared storage.
+    Rows are (clip_id, matched_track, offset_ms, vote_count), filtered
+    on ``min_votes`` only: unlike match_pipeline and match_stream_fused
+    they carry no ``score`` and no ``min_score`` filter applies.
     """
-    src = clips.repartition(decode_partitions) if decode_partitions else clips
-    lm = dsp.landmarks(src).withColumn(
+    lm = dsp.landmarks(clips).withColumn(
         "event_time", F.timestamp_millis(F.col("event_ms"))
     )
     joined = lm.withWatermark("event_time", watermark).join(
@@ -153,23 +148,7 @@ def match_stream(
     ).agg(F.count("*").alias("vote_count"))
 
     def emit(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql.window import Window
-
-        w = Window.partitionBy("clip_id").orderBy(
-            F.desc("vote_count"), F.asc("track_id"), F.asc("offset_bin")
-        )
-        best = (
-            batch_df.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .filter(F.col("vote_count") >= min_votes)
-            .select(
-                "clip_id",
-                F.col("track_id").alias("matched_track"),
-                (F.col("offset_bin") * matching.OFFSET_BIN_MS).alias("offset_ms"),
-                "vote_count",
-            )
-        )
-        sink(best, batch_id)
+        sink(matching.top1_matches(batch_df, min_votes=min_votes), batch_id)
 
     writer = votes.writeStream.foreachBatch(emit).outputMode("append").option(
         "checkpointLocation", checkpoint_dir
@@ -206,10 +185,3 @@ def match_stream_fused(
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def run_to_completion(query: StreamingQuery, timeout_s: int = 600) -> list[dict]:
-    """Drain an availableNow query; return its per-batch progress dicts
-    (per-partition lineage lives in progress['sources'][i]['startOffset'])."""
-    query.awaitTermination(timeout_s)
-    return [p.asDict() if hasattr(p, "asDict") else p for p in query.recentProgress]

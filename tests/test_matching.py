@@ -87,6 +87,51 @@ def test_fused_matcher_equals_relational(spark, clips, index):
     assert fused == rel
 
 
+@pytest.mark.parametrize(
+    "max_code, span, dense",
+    [(7, 300, True), (5_000_000, 2_000_000, False)],
+    ids=["small_catalog", "large_codes_wide_span"],
+)
+def test_vote_top1_winner_and_bounded_domain(monkeypatch, max_code, span, dense):
+    """The fused matcher's per-clip vote picks the np.unique winner
+    (most votes, ties to the smallest (track, offset)) and never counts
+    over a key space wider than O(len(candidates)): a large catalog's
+    track codes times a wide offset span must not size a bincount.
+    The spy checks the domain before any allocation happens."""
+    rng = np.random.default_rng(7)
+    n = 4000
+    codes = rng.choice([0, max_code // 2, max_code], size=n)
+    offs = rng.integers(-span // 2, span // 2, size=n)
+    # two planted pairs, outside the random offsets, tie for the most
+    # votes; the smaller (track, offset) must win
+    tie = [(max_code, span)] * 60 + [(max_code // 2, span + 1)] * 60
+    codes = np.r_[codes, [c for c, _ in tie]].astype(np.int32)
+    offs = np.r_[offs, [o for _, o in tie]].astype(np.int64)
+
+    pairs, counts = np.unique(
+        np.stack([codes.astype(np.int64), offs], axis=1), axis=0,
+        return_counts=True,
+    )
+    best = int(np.argmax(counts))
+    expected = (int(pairs[best, 0]), int(pairs[best, 1]), int(counts[best]))
+    assert expected == (max_code // 2, span + 1, 60)
+
+    real_bincount = np.bincount
+    domains = []
+
+    def spy(x, *args, **kwargs):
+        domains.append(int(x.max()) + 1)
+        assert domains[-1] <= 16 * len(x), (
+            f"bincount domain {domains[-1]} for {len(x)} candidates"
+        )
+        return real_bincount(x, *args, **kwargs)
+
+    monkeypatch.setattr(np, "bincount", spy)
+    got = matching.vote_top1(codes, offs)
+    assert tuple(int(v) for v in got) == expected
+    assert bool(domains) == dense
+
+
 def test_fused_stream_equals_batch(spark, clips, index, tmp_path):
     from sparkfp import streaming
     from sparkfp.sink import ExactlyOnceParquetSink
